@@ -40,38 +40,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional comma-separated subset (BenchContractSpec runs a 1-query
     // pass end-to-end through the real sbt-forked JVM to pin the bare-
     // JSON stdout contract without paying for the full surface).
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Round 18 (guide §2.2 "make partitioning scale-adaptive"): let AQE
-      // re-plan CACHED plans too, so a persisted frame's output partition
-      // count follows its measured size (coalesced small, split large)
-      // instead of freezing at spark.sql.shuffle.partitions. Every loop
-      // operator (CC/PageRank/kCore/Lloyd) persists its invariant tables;
-      // without this each round re-reads a 32-partition cache of a few KB
-      // (measured: q244_kcore 929→60 tasks, q243_hits 747→32, q273_rfm
-      // 808→122). Scale-neutral: at real size AQE keeps full parallelism.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The audited bounded-domain windows (Similarity/Pq/QuantileMonitor/
-    // q187's key table) trip WindowExec's unpartitioned-window WARN on
-    // every execution; across the full surface that spam buries the
-    // one-line JSON/progress contract in the driver's captured tail.
-    // PlanAuditSpec pins them as bounded, so silence just that logger.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(GraftSession.envCpus)
     val surface = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Warm JVM/codegen paths with two representative queries, then
     // drop their caches so every timed query materializes its own

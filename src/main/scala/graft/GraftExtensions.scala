@@ -2,150 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimilarity, ImageHeader, Md5BandSig, MinHashBandSig, MinHashSignature, SimHash64, SimHashMd5}
-
-/** Optimizer rule: cosine(x, x) ≡ 1.0 — the self-pair arm of near-dup
-  * pipelines constant-folds away instead of running the O(dim) kernel
-  * per row. Sound because the kernel defines zero-zero similarity as
-  * 1.0 (self-similarity convention) and the fold fires only on
-  * deterministic, non-nullable, semantically-equal children.
-  */
-object FoldSelfCosine extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{If, IsNull}
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case CosineSimilarity(a, b) if a.deterministic && a.semanticEquals(b) =>
-        if (a.nullable) If(IsNull(a), Literal(null, DoubleType), Literal(1.0, DoubleType))
-        else Literal(1.0, DoubleType)
-    }
-}
-
-/** Optimizer rule: NFC is idempotent — `graft_nfc(graft_nfc(x))`
-  * collapses to one application. Pipelines that normalize defensively
-  * at every stage boundary (ingest AND dedup AND tokenize) otherwise
-  * pay the kernel once per stage; after the fold the scan projection
-  * carries a single pass. Sound unconditionally: NFC(NFC(s)) = NFC(s)
-  * for every string, including null (the inner expression's own null
-  * handling is preserved by keeping the inner node).
-  */
-object FoldNfcIdempotence extends Rule[LogicalPlan] {
-  import graft.functions.NfcNormalize
-  // bottom-up, so an arbitrarily deep nfc(nfc(...(x))) stack collapses
-  // to one application in a single rule pass
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp { case p =>
-      p.transformExpressionsUp {
-        case NfcNormalize(inner @ NfcNormalize(_)) => inner
-      }
-    }
-}
-
-/** Optimizer rule: `size(regexp_extract_all(s, p, 0))` — the counting
-  * spelling behind every quality/token/PII ratio — rewrites to the
-  * allocation-free native [[graft.functions.CountMatches]] kernel
-  * (same java.util.regex engine, bit-identical counts, no per-match
-  * UTF8String or array materialization). Fires only on the exact
-  * shape whose semantics CountMatches reproduces: group index 0, a
-  * non-null foldable pattern, and modern `size` null semantics
-  * (`legacySizeOfNull = false`, where size(NULL) is NULL — matching
-  * the expression's null-in/null-out; the legacy -1 form is left
-  * alone). `regexp_extract_all` calls whose ARRAY is consumed
-  * (distinct counts, explodes) are untouched.
-  */
-object FoldCountMatches extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{RegExpExtractAll, Size}
-  import org.apache.spark.sql.types.{IntegerType, StringType}
-  import graft.functions.CountMatches
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case Size(RegExpExtractAll(subject, pat, Literal(0, IntegerType)), false)
-          if pat.foldable && pat.dataType == StringType &&
-            subject.dataType == StringType && pat.eval() != null =>
-        CountMatches(subject, pat)
-    }
-}
+import graft.functions.GraftFunctions
 
 /** SURVEY.md §2.5 #48 — SparkSessionExtensions entry point: makes the
-  * graft native expressions available to pure-SQL users via
-  * `spark.sql.extensions=graft.GraftExtensions` (no code changes on
-  * their side), in addition to the per-session
-  * `GraftFunctions.register`.
+  * graft native expressions and planner strategies available to
+  * pure-SQL users via `spark.sql.extensions=graft.GraftExtensions` (no
+  * code changes on their side). The functions are the same table the
+  * per-session [[GraftFunctions.register]] installs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => FoldSelfCosine)
-    e.injectOptimizerRule(_ => FoldNfcIdempotence)
-    e.injectOptimizerRule(_ => FoldCountMatches)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.HammingSelfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     e.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (es: Seq[Expression]) => CosineSimilarity(es.head, es(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "graft_simhash_md5"),
-      (es: Seq[Expression]) => SimHashMd5(es.head)))
-    def intLit(ex: Expression, arg: String): Int = ex match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$arg must be an integer literal, got $other")
+    GraftFunctions.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), build))
     }
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (es: Seq[Expression]) => MinHashSignature(es.head,
-        intLit(es(1), "shingleWidth"), intLit(es(2), "nSeeds"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBandSig].getName, "graft_minhash_bands"),
-      (es: Seq[Expression]) => MinHashBandSig(es.head,
-        intLit(es(1), "shingleWidth"), intLit(es(2), "nSeeds"),
-        intLit(es(3), "rowsPerBand"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_md5_bands"),
-      new ExpressionInfo(classOf[Md5BandSig].getName, "graft_md5_bands"),
-      (es: Seq[Expression]) => Md5BandSig(es.head,
-        intLit(es(1), "shingleWidth"), intLit(es(2), "nSeeds"),
-        intLit(es(3), "rowsPerBand"))))
-    e.injectFunction((
-      FunctionIdentifier("graft_image_header"),
-      new ExpressionInfo(classOf[ImageHeader].getName, "graft_image_header"),
-      (es: Seq[Expression]) => ImageHeader(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, "graft_nfc"),
-      (es: Seq[Expression]) => graft.functions.NfcNormalize(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_ahash64"),
-      new ExpressionInfo(classOf[graft.functions.AHash64].getName, "graft_ahash64"),
-      (es: Seq[Expression]) => graft.functions.AHash64(es.head)))
-    // variadic quantile list: graft_kll_quantiles(value, k, q1, q2, ...)
-    // — the analyzer wraps the returned AggregateFunction itself
-    def dblLit(ex: Expression, arg: String): Double = ex match {
-      case Literal(v: Double, _) => v
-      case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-      case Literal(v: Int, _) => v.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$arg must be a numeric literal, got $other")
-    }
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[graft.functions.KllQuantiles].getName,
-        "graft_kll_quantiles"),
-      (es: Seq[Expression]) => graft.functions.KllQuantiles(es.head,
-        intLit(es(1), "k"), es.drop(2).map(dblLit(_, "q")))
-        .toAggregateExpression()))
   }
 }

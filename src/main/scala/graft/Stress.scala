@@ -23,7 +23,10 @@ import graft.operators.{Dedup, Similarity}
   * into STRESS_r{N}.json, alongside the LSH/simhash bucket-occupancy
   * diagnostics that show which guards fired.
   *
-  *   sbt "runMain graft.Stress [srcSfDir] [stressDir] [outJson]"
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.Stress [srcSfDir] [stressDir] [outJson]"
+  *
+  * (the committed STRESS_r*.json ran at 32 task threads; the
+  * [[GraftSession]] default is 4)
   */
 object Stress {
 
@@ -334,26 +337,7 @@ object Stress {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val stressDir = args.lift(1).getOrElse("/tmp/graft_stress10")
     val outJson = args.lift(2).getOrElse("STRESS_r17.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_MEM", "48g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The audited bounded-domain windows (Similarity/Pq/QuantileMonitor/
-    // q187's key table) trip WindowExec's unpartitioned-window WARN on
-    // every execution; across the full surface that spam buries the
-    // one-line JSON/progress contract in the driver's captured tail.
-    // PlanAuditSpec pins them as bounded, so silence just that logger.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(GraftSession.envCpus)
 
     if (!Files.exists(Paths.get(s"$stressDir/documents.parquet")) ||
       args.contains("--regen")) {

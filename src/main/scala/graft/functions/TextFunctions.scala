@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -585,8 +585,8 @@ case class DeflateRatio(child: Expression) extends UnaryExpression {
   * loop) and allocates nothing. The pattern must be a foldable
   * literal — it compiles ONCE per expression instance and ships into
   * generated code as a reference object, not a per-row compile.
-  * Returns IntegerType to be a drop-in for `size(...)` (see
-  * [[graft.FoldCountMatches]]).
+  * Returns IntegerType to be a drop-in for `size(...)` (PlanAuditSpec
+  * pins the count parity against the builtin spelling).
   */
 case class CountMatches(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -841,73 +841,62 @@ object GraftFunctions {
         i => array_join(slice(words, i, lit(w)), " ")))
       .otherwise(array().cast("array<string>"))
 
-  /** Register SQL-callable versions (SURVEY §2.5 #48). */
+  private def intLit(e: Expression, arg: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$arg must be an integer literal, got $other")
+  }
+
+  private def dblLit(e: Expression, arg: String): Double = e match {
+    case Literal(v: Double, _) => v
+    case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
+    case Literal(v: Int, _) => v.toDouble
+    case other => throw new IllegalArgumentException(
+      s"$arg must be a numeric literal, got $other")
+  }
+
+  /** The SQL function table (SURVEY §2.5 #48): one (name, builder)
+    * entry per SQL-callable graft function, installed per session by
+    * [[register]] and per process by [[graft.GraftExtensions]]. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_cosine" -> (es => CosineSimilarity(es.head, es(1))),
+    "graft_simhash64" -> (es => SimHash64(es.head)),
+    "graft_simhash_md5" -> (es => SimHashMd5(es.head)),
+    "graft_minhash" -> (es => MinHashSignature(es.head,
+      intLit(es(1), "shingleWidth"), intLit(es(2), "nSeeds"))),
+    "graft_minhash_bands" -> (es => MinHashBandSig(es.head, intLit(es(1), "shingleWidth"),
+      intLit(es(2), "nSeeds"), intLit(es(3), "rowsPerBand"))),
+    "graft_md5_bands" -> (es => Md5BandSig(es.head, intLit(es(1), "shingleWidth"),
+      intLit(es(2), "nSeeds"), intLit(es(3), "rowsPerBand"))),
+    "graft_shingle_set" -> (es => ShingleSet(es.head, intLit(es(1), "shingleWidth"))),
+    "graft_winnow" -> (es => WinnowFingerprints(es.head,
+      intLit(es(1), "k"), intLit(es(2), "w"))),
+    "graft_nearest_centroid" -> (es => NearestCentroid(es.head, es(1))),
+    "graft_moment_vec" -> (es => MomentVector(es.head)),
+    "graft_adc_dist" -> (es => AdcDistance(es.head, es(1))),
+    "graft_char_entropy" -> (es => CharEntropy(es.head)),
+    "graft_nfc" -> (es => NfcNormalize(es.head)),
+    "graft_count_matches" -> (es => CountMatches(es.head, es(1))),
+    "graft_lcs_len" -> (es => LcsLength(es.head, es(1))),
+    "graft_deflate_ratio" -> (es => DeflateRatio(es.head)),
+    "graft_jaro_winkler" -> (es => JaroWinklerSim(es.head, es(1))),
+    "graft_soundex" -> (es => SoundexCode(es.head)),
+    "graft_bloom_agg" -> (es => BloomAggregate(es.head, intLit(es(1), "numBits"),
+      intLit(es(2), "numHashes")).toAggregateExpression()),
+    "graft_bloom_contains" -> (es =>
+      BloomMightContain(es.head, es(1), intLit(es(2), "numHashes"))),
+    "graft_image_header" -> (es => ImageHeader(es.head)),
+    "graft_ahash64" -> (es => AHash64(es.head)),
+    // variadic quantile list: graft_kll_quantiles(value, k, q1, q2, ...)
+    // — the analyzer wraps the returned AggregateFunction itself
+    "graft_kll_quantiles" -> (es => KllQuantiles(es.head, intLit(es(1), "k"),
+      es.drop(2).map(dblLit(_, "q"))).toAggregateExpression()))
+
+  /** Register the SQL-callable versions on one session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def intLit(e: Expression, arg: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$arg must be an integer literal, got $other")
+    sqlFunctions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
     }
-    reg.createOrReplaceTempFunction("graft_cosine",
-      es => CosineSimilarity(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_md5",
-      es => SimHashMd5(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      es => MinHashSignature(es.head,
-        intLit(es(1), "shingleWidth"), intLit(es(2), "nSeeds")), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_bands",
-      es => MinHashBandSig(es.head, intLit(es(1), "shingleWidth"),
-        intLit(es(2), "nSeeds"), intLit(es(3), "rowsPerBand")), "built-in")
-    reg.createOrReplaceTempFunction("graft_md5_bands",
-      es => Md5BandSig(es.head, intLit(es(1), "shingleWidth"),
-        intLit(es(2), "nSeeds"), intLit(es(3), "rowsPerBand")), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_set",
-      es => ShingleSet(es.head, intLit(es(1), "shingleWidth")), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      es => WinnowFingerprints(es.head,
-        intLit(es(1), "k"), intLit(es(2), "w")), "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_centroid",
-      es => NearestCentroid(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_moment_vec",
-      es => MomentVector(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_adc_dist",
-      es => AdcDistance(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_entropy",
-      es => CharEntropy(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      es => NfcNormalize(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_count_matches",
-      es => CountMatches(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lcs_len",
-      es => LcsLength(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_deflate_ratio",
-      es => DeflateRatio(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      es => JaroWinklerSim(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_soundex",
-      es => SoundexCode(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      es => BloomAggregate(es.head, intLit(es(1), "numBits"),
-        intLit(es(2), "numHashes")).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      es => BloomMightContain(es.head, es(1), intLit(es(2), "numHashes")), "built-in")
-    reg.createOrReplaceTempFunction("graft_image_header",
-      es => ImageHeader(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_ahash64",
-      es => AHash64(es.head), "built-in")
-    def dblLit(e: Expression, arg: String): Double = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$arg must be a numeric literal, got $other")
-    }
-    reg.createOrReplaceTempFunction("graft_kll_quantiles",
-      es => KllQuantiles(es.head, intLit(es(1), "k"),
-        es.drop(2).map(dblLit(_, "q"))).toAggregateExpression(), "built-in")
   }
 }

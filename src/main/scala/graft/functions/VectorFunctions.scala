@@ -25,9 +25,8 @@ object VectorOps {
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    // zero-zero ⇒ 1.0 (self-similarity convention — keeps the
-    // FoldSelfCosine optimizer rule semantics-preserving),
-    // zero vs non-zero ⇒ 0.0
+    // zero-zero ⇒ 1.0 (self-similarity convention: cosine(x, x) is
+    // 1.0 for every x), zero vs non-zero ⇒ 0.0
     if (na == 0.0 && nb == 0.0) 1.0
     else if (na == 0.0 || nb == 0.0) 0.0
     else dot / (math.sqrt(na) * math.sqrt(nb))

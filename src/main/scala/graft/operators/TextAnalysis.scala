@@ -12,7 +12,7 @@ object TextAnalysis {
 
   // the native allocation-free count kernel (same regex engine +
   // find() walk as size(regexp_extract_all(c, p, 0)), bit-identical
-  // counts — FoldCountMatches proves the equivalence in PlanAuditSpec)
+  // counts — PlanAuditSpec pins the equivalence)
   private def nMatches(c: Column, pattern: String): Column =
     graft.functions.GraftFunctions.countMatches(c, pattern)
 

@@ -285,7 +285,7 @@ object RetrievalQueries {
       // each round's selected frame (≤ 5·step rows) checkpoints: it
       // has TWO consumers per following step (anti-join + max-sim
       // join), so raw lineage DOUBLES per step — the plan printed
-      // 600+ exchanges before this (measured via PlanCount). The
+      // 600+ exchanges before this (measured via Probe). The
       // iterative-family loopCheckpoint discipline (PageRank/CC/BPE)
       // truncates each round to its materialized result.
       import graft.Caching.LoopCheckpoint
@@ -362,7 +362,7 @@ object RetrievalQueries {
     // (a_id, b_id, cos_u) tuples, shuffled by a_id then b_id.
     "q219_bitext_mine" -> { (s, d) =>
       import graft.Caching.{FanOut, LoopCheckpoint, ScopedPersist}
-      // Round 18 second pass (guide §2.5): StageProfile showed the
+      // Round 18 second pass (guide §2.5): Probe's stage table showed the
       // pairs-persist materializing on ONE task (1.35 s of cosine CPU)
       // while five concurrent consumer jobs blocked on the cache lock —
       // the A-side fan-out parallelizes the cosine projection (the

@@ -214,7 +214,7 @@ object TextQueries {
     "q31_minhash_sigs" -> { (s, d) =>
       import graft.Caching.FanOut
       // round 18 second pass (guide §2.5): the shingle+md5 front ran
-      // on the scan's single split (StageProfile: one 0.81 s task, the
+      // on the scan's single split (Probe stage table: one 0.81 s task, the
       // whole warm pass) — fan the scan out so it parallelizes; the
       // per-seed mins aggregate map-side, so the exchange stays
       // doc-bounded. No-op at real scale.

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal end-to-end usage of the public library surface — what a
   * user switching from the reference pipeline would write. Run:
   * `sbt "runMain graft.tools.Example"`.
@@ -9,16 +7,10 @@ import org.apache.spark.sql.SparkSession
 object Example {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-example")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // what a pure-SQL user sets: the graft functions and planner
+    // strategies arrive through the session extension, no code needed
+    System.setProperty("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession(graft.GraftSession.envCpus)
 
     // sources: csv round-trip through the reader surface
     val csvPath = java.nio.file.Files.createTempFile("graft-example", ".csv")
@@ -59,7 +51,7 @@ object Example {
     val batch = graft.SparkEntry.queries("q44_sessionize")(spark, sfDir).count()
     println(s"stateful stream sessions = $streamed (batch = $batch)")
 
-    // extensions: SQL-registered native functions + self-cosine fold
+    // extensions: SQL-registered native functions
     val c = spark.sql(
       "SELECT graft_cosine(array(3.0f, 4.0f), array(3.0f, 4.0f)) AS c").first().getDouble(0)
     println(s"graft_cosine via extensions = $c")

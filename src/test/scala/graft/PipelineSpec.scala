@@ -44,8 +44,23 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("GraftExtensions installs without error") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must register both functions cleanly
+    // spark.sql.extensions users must get the same SQL functions a
+    // session gets from GraftFunctions.register — record every name
+    // the extension injects and compare with the registry's graft_*
+    val injected = scala.collection.mutable.ArrayBuffer[String]()
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(fd: FunctionDescription): Unit = {
+        injected += fd._1.funcName
+        super.injectFunction(fd)
+      }
+    }
+    new GraftExtensions().apply(ext)
+    GraftFunctions.register(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injected.size == injected.toSet.size, s"duplicate injections: $injected")
+    assert(injected.toSet == registered,
+      s"only injected: ${injected.toSet -- registered}; only registered: ${registered -- injected}")
   }
 
   test("pivot(list)+unnest round trip conserves every order exactly once") {

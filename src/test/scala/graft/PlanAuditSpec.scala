@@ -145,17 +145,6 @@ class PlanAuditSpec extends SparkSpecBase {
     }
   }
 
-  test("FoldSelfCosine folds cosine(x,x) to a literal") {
-    val emb = Tables.embeddings(spark, sf)
-    val df = emb.select(GraftFunctions.cosine(col("embedding"), col("embedding")).as("c"))
-    val optimized = graft.FoldSelfCosine(df.queryExecution.analyzed)
-    assert(optimized.toString.contains("1.0"),
-      s"self-cosine not folded:\n$optimized")
-    // and the fold is semantics-preserving on real data
-    val vals = df.limit(5).collect().map(_.getDouble(0))
-    assert(vals.forall(v => math.abs(v - 1.0) < 1e-9))
-  }
-
   test("CountMatches counts exactly like size(regexp_extract_all(_, p, 0))") {
     val docs = Tables.documents(spark, sf).limit(200)
     // overlap-prone, zero-width-capable, unicode-class and anchored
@@ -172,39 +161,5 @@ class PlanAuditSpec extends SparkSpecBase {
     val row = spark.sql("SELECT 1").select(
       GraftFunctions.countMatches(lit(null).cast("string"), "x").as("n")).first()
     assert(row.isNullAt(0), "null subject must count null, not 0/-1")
-  }
-
-  test("FoldCountMatches rewrites the counting spelling, leaves array consumers") {
-    val docs = Tables.documents(spark, sf)
-    val counting = docs.select(
-      size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).as("n"))
-    val folded = graft.FoldCountMatches(counting.queryExecution.analyzed)
-    assert(folded.toString.contains("graft_count_matches"),
-      s"counting spelling not folded:\n$folded")
-    // semantics preserved on real data
-    val viaRule = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, folded)
-    assert(viaRule.exceptAll(counting).isEmpty && counting.exceptAll(viaRule).isEmpty)
-    // group index != 0 extracts group text, not whole matches — must not fire
-    val grouped = docs.select(
-      size(regexp_extract_all(col("text"), lit("(a)b"), lit(1))).as("n"))
-    assert(!graft.FoldCountMatches(grouped.queryExecution.analyzed)
-      .toString.contains("graft_count_matches"), "idx=1 must not fold")
-    // a consumed array (distinct-count) must keep the builtin
-    val arrayUse = docs.select(
-      size(array_distinct(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))).as("n"))
-    assert(!graft.FoldCountMatches(arrayUse.queryExecution.analyzed)
-      .toString.contains("graft_count_matches"), "array consumer must not fold")
-  }
-
-  test("FoldNfcIdempotence collapses stacked normalizations to one kernel call") {
-    val docs = Tables.documents(spark, sf)
-    val stacked = docs.select(
-      GraftFunctions.nfc(GraftFunctions.nfc(GraftFunctions.nfc(col("text")))).as("t"))
-    val optimized = graft.FoldNfcIdempotence(stacked.queryExecution.analyzed)
-    val hits = optimized.toString.sliding("graft_nfc".length).count(_ == "graft_nfc")
-    assert(hits == 1, s"expected one graft_nfc after the fold, got $hits:\n$optimized")
-    // semantics preserved: single and triple application agree
-    val single = docs.select(GraftFunctions.nfc(col("text")).as("t"))
-    assert(stacked.exceptAll(single).isEmpty && single.exceptAll(stacked).isEmpty)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.SketchQueries
 import graft.streaming.StatefulSessions
@@ -149,21 +150,28 @@ class ScaleSpec extends SparkSpecBase {
     assert(planted.subsetOf(pairs), s"narrow front missed ${(planted -- pairs).take(3)}")
   }
 
+  private val ccVariants: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "min-label" -> (graft.operators.Dedup.connectedComponents(_, maxIter = 50)),
+    "two-phase" -> (graft.operators.Dedup.connectedComponentsTwoPhase(_, maxIter = 50)))
+
   test("iterative loops release superseded checkpoint blocks (bounded storage)") {
     import spark.implicits._
     spark.catalog.clearCache()
     val baseline = spark.sparkContext.getPersistentRDDs.size
-    // long chain → many pointer-jump rounds; 4096 nodes ≈ 12 rounds
+    // long chain → many rounds (4096 nodes ≈ 12 pointer-jump rounds);
+    // both CC variants: min-label and the two-phase loop the queries run
     val chain = (0L until 4095L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = graft.operators.Dedup.connectedComponents(chain, maxIter = 50)
-    assert(cc.select(countDistinct(col("cluster_id"))).first().getLong(0) == 1L)
-    // after the operator returns: ONE retained table (the result
-    // checkpoint) — not one per round, and the pair/edge persists are
-    // gone (unpersist removes the registry entry synchronously)
-    val afterCC = spark.sparkContext.getPersistentRDDs.size
-    assert(afterCC <= baseline + 1,
-      s"CC leaked checkpoint blocks: $baseline -> $afterCC persistent RDDs")
-    Caching.releaseCheckpoint(cc)
+    ccVariants.foreach { case (variant, ccOf) =>
+      val cc = ccOf(chain)
+      assert(cc.select(countDistinct(col("cluster_id"))).first().getLong(0) == 1L)
+      // after the operator returns: ONE retained table (the result
+      // checkpoint) — not one per round, and the pair/edge persists are
+      // gone (unpersist removes the registry entry synchronously)
+      val afterCC = spark.sparkContext.getPersistentRDDs.size
+      assert(afterCC <= baseline + 1,
+        s"$variant CC leaked checkpoint blocks: $baseline -> $afterCC persistent RDDs")
+      Caching.releaseCheckpoint(cc)
+    }
 
     // 20 deterministic pageRank rounds, eager point every 5
     val edges = (0L until 500L).map(i => (i, (i * 7 + 1) % 500)).toDF("src", "dst")
@@ -190,19 +198,19 @@ class ScaleSpec extends SparkSpecBase {
     // Same inputs through both modes must produce identical results.
     val chain = (0L until 1023L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val edges = (0L until 300L).map(i => (i, (i * 7 + 1) % 300)).toDF("src", "dst")
-    def ccRun() = graft.operators.Dedup.connectedComponents(chain, maxIter = 50)
-      .as[(Long, Long)].collect().sorted.toSeq
+    def ccRuns() = ccVariants.map { case (variant, ccOf) =>
+      variant -> ccOf(chain).as[(Long, Long)].collect().sorted.toSeq }
     def prRun() = graft.operators.Graph.pageRank(edges, iters = 8, ckptEvery = 3)
       .select(col("id"), round(col("rank"), 10).as("rank"))
       .as[(Long, Double)].collect().sorted.toSeq
     def bpeRun() = graft.operators.Bpe.learnMerges(
         Seq("aa ab aa ab ba", "aa ab aa").toDF("text"), "text", k = 3)
       .select("rank", "merged").as[(Int, String)].collect().sorted.toSeq
-    val (ccLocal, prLocal, bpeLocal) = (ccRun(), prRun(), bpeRun())
+    val (ccLocal, prLocal, bpeLocal) = (ccRuns(), prRun(), bpeRun())
     val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt")
     spark.conf.set("spark.graft.checkpointDir", dir.toString)
     try {
-      assert(ccRun() == ccLocal, "CC diverged under reliable checkpointing")
+      assert(ccRuns() == ccLocal, "CC diverged under reliable checkpointing")
       assert(prRun() == prLocal, "pageRank diverged under reliable checkpointing")
       assert(bpeRun() == bpeLocal, "BPE diverged under reliable checkpointing")
       // reliable rounds actually landed on the FS

@@ -112,7 +112,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // sources × (partial+final), not fact-sized shuffles)
     "q190_preference_pairs" -> 2,
     "q191_video_storyboard" -> 2,
-    // round-11 additions (measured via graft.tools.PlanCount, both
+    // round-11 additions (measured via graft.tools.Probe, both
     // AQE modes): q192 is four eval-bounded explode-join branches +
     // the lazy-guard count branch; q197 reads its last loopCheckpoint
     // (iterative-family discipline, like q91); q198's extra AQE-on
@@ -153,7 +153,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // crossJoin+Window onto a narrow broadcast kernel — each assignment
     // pass now costs one nCentroids-row SinglePartition fold instead of
     // a corpus×nCentroids hashpartitioning window exchange. Text counts
-    // re-measured via PlanCount (q62 31/13, q153 119/35 on/off; q188
+    // re-measured via Probe (q62 31/13, q153 119/35 on/off; q188
     // 31/18); the real executed-exchange truth is in realPins below.
     "q188_index_drift" -> 31,
     "q189_annotate_genes" -> 40,
@@ -161,7 +161,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "q62_ann_ivf" -> 31,
     "q152_pq_ann" -> 90,
     "q153_ivfpq_ann" -> 119,
-    // round-13 additions (measured via PlanCount, both AQE modes):
+    // round-13 additions (measured via Probe, both AQE modes):
     // q233 reads its last loopCheckpoint (iterative-family
     // discipline); q234's count is dominated by the scopedPersist'd
     // token subtree re-printing per consumer + the m-row scalar
@@ -171,7 +171,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // (k-bounded partials; the exec's internal shuffle is an RDD-level
     // repartitionAndSort, not a SQL Exchange) — the text counts move
     // because the persisted pair subtree re-prints under AQE (7 on /
-    // 5 off, measured via PlanCount)
+    // 5 off, measured via Probe)
     "q219_bitext_mine" -> 7,
     "q225_coreset" -> 8,
     "q228_bloom_semijoin" -> 4,
@@ -179,17 +179,19 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "q233_label_propagation" -> 1,
     "q234_doremi_step" -> 16,
     "q226_theta_overlap" -> 9,
-    // round-14 additions (PlanCount, both modes): q243's count is the
+    // round-14 additions (Probe, both modes): q243's count is the
     // scopedPersist'd edge subtree re-printing once per consumer
     // (integer HITS reads edges in every round's two aggregates —
     // plan-string totals, not executed shuffles; the q234 class);
-    // q247/q258 likewise re-print their persisted token/point
-    // subtrees under AQE's adaptive render
+    // q247 likewise re-prints its persisted token subtree under
+    // AQE's adaptive render. q258 (14 → 8 on, 6 → 4 off): core points
+    // enter the CC as self-loops, so no core ⟕ cc join re-shuffles a
+    // cache that no longer advertises its hash partitioning
     "q243_hits" -> 47,
     "q244_kcore" -> 6,
     "q247_setsim_join" -> 20,
     "q255_basket_rules" -> 14,
-    "q258_dbscan" -> 14)
+    "q258_dbscan" -> 8)
 
   // Round 10 (judge ask #6): a real cluster flips
   // spark.sql.adaptive.enabled, so the pins hold under BOTH modes.
@@ -221,7 +223,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "q244_kcore" -> 5,
     "q247_setsim_join" -> 12,
     "q255_basket_rules" -> 12,
-    "q258_dbscan" -> 6,
+    "q258_dbscan" -> 4,
     // round 15: q262's learning shuffles run at plan-build time behind
     // localCheckpoints (the q119 BPE shape) so the served plan is
     // exchange-free; the LM-family trio pays one partial-agg groupBy

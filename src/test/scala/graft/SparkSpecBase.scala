@@ -3,16 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs — one JVM-wide SparkSession, lazy. */
+/** Shared session for specs — one JVM-wide SparkSession, lazy, built by
+  * the same [[GraftSession]] the bench and the oracle dump run on. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cpus = 4)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {

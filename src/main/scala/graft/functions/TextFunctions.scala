@@ -329,8 +329,9 @@ object TextOps {
     * per w-word shingle ONE md5; seed s's minhash is the lexicographic
     * min of the 4-hex-char slice at offset 4s; band b's signature is
     * the md5 of its rowsPerBand minhashes joined by ','. Bit-identical
-    * to the aggregate formulation (Dedup.lshBandsMd5, and the DuckDB
-    * oracle's `MIN(substr(md5(sh), seed*4+1, 4))` +
+    * to the aggregate formulation (a doc_id groupBy over
+    * Dedup.docShingles, spec-checked in DedupSimilaritySpec, and the
+    * DuckDB oracle's `MIN(substr(md5(sh), seed*4+1, 4))` +
     * `md5(string_agg(minhash, ','))`), but with no exchange, no sort,
     * and no per-shingle row materialization. Docs with fewer than w
     * words yield an empty array (the aggregate path drops them too).

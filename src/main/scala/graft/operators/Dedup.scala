@@ -34,7 +34,7 @@ object Dedup {
     * The shuffle is on doc_id — the per-seed mins aggregate map-side,
     * so only ≤ docs rows cross the exchange regardless of shingle
     * count. For the no-oracle production path see
-    * [[minhashSignaturesFast]] (xxhash64, no string materialization).
+    * [[lshBandsNarrow]] (xxhash64, no exchange, no shingle rows).
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         shingleWidth: Int, nSeeds: Int): DataFrame = {
@@ -52,34 +52,16 @@ object Dedup {
       .withColumnRenamed("col", "minhash")
   }
 
-  /** Production minhash: same plan shape as [[minhashSignatures]] but
-    * per-seed xxhash64 — codegen'd long arithmetic, no hex-string
-    * materialization, 64-bit minima. Not oracle-paired (DuckDB has no
-    * xxhash64); banding parity with the md5 path is spec-checked
-    * (DedupSimilaritySpec).
-    */
-  def minhashSignaturesFast(docs: DataFrame, idCol: String, textCol: String,
-                            shingleWidth: Int, nSeeds: Int): DataFrame = {
-    val shingles = docShingles(docs, idCol, textCol, shingleWidth)
-    val mins = (0 until nSeeds).map(s =>
-      min(xxhash64(lit(s), col("sh"))).as(s"mh_$s"))
-    shingles
-      .groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        posexplode(array((0 until nSeeds).map(s => col(s"mh_$s")): _*)))
-      .withColumnRenamed("pos", "seed")
-      .withColumnRenamed("col", "minhash")
-  }
-
-  /** (doc_id, shingle) stream — shared front of both minhash paths.
-    * Deliberately NOT deduplicated: min() is duplicate-insensitive,
-    * so a distinct here would add a full shuffle of the shingle
-    * stream for nothing — the grouped min handles repeats map-side.
+  /** (doc_id, shingle) stream — the front of [[minhashSignatures]]
+    * and of the aggregate band formulation the specs hold
+    * [[lshBandsMd5Narrow]] against. Deliberately NOT deduplicated:
+    * min() is duplicate-insensitive, so a distinct here would add a
+    * full shuffle of the shingle stream for nothing — the grouped min
+    * handles repeats map-side.
     * normWords is bound to a column before shingling (higher-order
     * lambdas disable subexpression elimination).
     */
-  private def docShingles(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def docShingles(docs: DataFrame, idCol: String, textCol: String,
                           shingleWidth: Int): DataFrame = {
     val words = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.normWords(col(textCol)).as("ws"))
@@ -165,43 +147,15 @@ object Dedup {
         round(col("n_inter").cast("double") / col("n_union"), 6).as("jac"))
   }
 
-  /** Fused md5 LSH band path: per-seed minima AND the per-band
-    * signature fold happen in ONE doc_id aggregation — band b's sig is
-    * md5 over its seeds' minima column-wise, so the posexplode→
-    * groupBy(doc_id, band) second shuffle of
-    * [[lshBands]]∘[[minhashSignatures]] disappears. Bit-identical
-    * output (same concat_ws(",") string under md5), one exchange
-    * instead of two — at 100 TB that's the difference between one and
-    * two full passes of the signature table through the shuffle.
-    */
-  def lshBandsMd5(docs: DataFrame, idCol: String, textCol: String,
-                  shingleWidth: Int, nSeeds: Int, rowsPerBand: Int): DataFrame = {
-    require(nSeeds <= 8, s"seed slices are 4 hex chars of one md5: nSeeds <= 8, got $nSeeds")
-    require(nSeeds % rowsPerBand == 0, "nSeeds must be a multiple of rowsPerBand")
-    val hashed = docShingles(docs, idCol, textCol, shingleWidth)
-      .select(col("doc_id"), md5(col("sh")).as("h"))
-    val mins = (0 until nSeeds).map(s =>
-      min(substring(col("h"), s * 4 + 1, 4)).as(s"mh_$s"))
-    val bandSigs = (0 until nSeeds / rowsPerBand).map { b =>
-      md5(concat_ws(",",
-        (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}")): _*))
-    }
-    hashed
-      .groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), posexplode(array(bandSigs: _*)))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_sig"))
-  }
-
-  /** [[lshBandsMd5]] with the whole signature stage fused into ONE
-    * codegen'd kernel per document (Md5BandSig) — bit-identical band
-    * signatures (same md5-slice arithmetic, so the same DuckDB
-    * oracles hold) but NO exchange, no sort-aggregate, and no
+  /** Oracle-reproducible LSH bands: band b's signature is the md5 of
+    * its rowsPerBand [[minhashSignatures]] minima joined by ',', the
+    * whole signature stage fused into ONE codegen'd kernel per
+    * document (Md5BandSig) — the same md5-slice arithmetic as the
+    * DuckDB oracles, but NO exchange, no sort-aggregate, and no
     * per-shingle row materialization before the bucket join. The
-    * round-6 rewrite that gives q31b/q59/q79/q103 the same
-    * zero-shuffle front the xxhash production path always had;
-    * equality with the aggregate formulation is spec-asserted
-    * (DedupSimilaritySpec).
+    * q31b/q59/q79/q103 front; bit-equality with the aggregate
+    * formulation (doc_id groupBy over [[docShingles]]) is
+    * spec-asserted (DedupSimilaritySpec).
     */
   def lshBandsMd5Narrow(docs: DataFrame, idCol: String, textCol: String,
                         shingleWidth: Int, nSeeds: Int, rowsPerBand: Int): DataFrame = {
@@ -224,7 +178,7 @@ object Dedup {
     * signature stage is a single map pass over the corpus scan;
     * compare [[minhashSignatures]], whose oracle-reproducible md5
     * path pays one doc_id exchange. Output schema matches
-    * [[lshBands]] (doc_id, band, band_sig) so
+    * [[lshBandsMd5Narrow]] (doc_id, band, band_sig) so
     * [[lshCandidatePairs]] consumes either interchangeably.
     */
   def lshBandsNarrow(docs: DataFrame, idCol: String, textCol: String,
@@ -237,19 +191,6 @@ object Dedup {
           shingleWidth, nSeeds, rowsPerBand)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("band_sig"))
 
-  /** LSH banding: fold each band's minhashes (in seed order) into one
-    * band signature. Collision on (band, band_sig) ⇒ candidate pair.
-    * (minhash is cast to string so the md5 and xxhash64 signature
-    * paths band identically.)
-    */
-  def lshBands(signatures: DataFrame, rowsPerBand: Int): DataFrame =
-    signatures
-      .withColumn("band", expr(s"seed div $rowsPerBand"))
-      .groupBy(col("doc_id"), col("band"))
-      .agg(md5(concat_ws(",",
-        transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-          x => x.getField("minhash").cast("string")))).as("band_sig"))
-
   /** Hot-bucket-bounded self-join: all docs sharing a bucket key
     * become candidate pairs, but a bucket with n > maxBucket members
     * emits its n−1 CHAIN pairs (consecutive by id) instead of all
@@ -257,11 +198,9 @@ object Dedup {
     * connected-components still recovers the full duplicate group.
     * Without the guard a single boilerplate bucket of 10⁷ docs at
     * 100 TB would emit 10¹⁴ pairs; with it, 10⁷−1.
-    *
-    * `payload` columns are carried to both sides as `<name>_a/_b`.
     */
-  private[operators] def boundedBucketPairs(rows: DataFrame, bucketKeys: Seq[String],
-      idCol: String, payload: Seq[String], maxBucket: Int): DataFrame = {
+  private def boundedBucketPairs(rows: DataFrame, bucketKeys: Seq[String],
+      idCol: String, maxBucket: Int): DataFrame = {
     val keys = bucketKeys.map(col)
     val wOrd = Window.partitionBy(keys: _*).orderBy(col(idCol))
     // same partition+order spec for both window functions (the count
@@ -273,11 +212,9 @@ object Dedup {
       .withColumn("__bn", count(lit(1)).over(wAll))
       .withColumn("__rn", row_number().over(wOrd))
       .scopedPersist()
-    def side(suffix: String, rnShift: Int): DataFrame = {
-      val base = Seq(col(idCol).as(s"doc_$suffix")) ++
-        payload.map(p => col(p).as(s"${p}_$suffix"))
-      t.select(keys ++ Seq((col("__rn") + rnShift).as("__rn"), col("__bn")) ++ base: _*)
-    }
+    def side(suffix: String, rnShift: Int): DataFrame =
+      t.select(keys ++ Seq((col("__rn") + rnShift).as("__rn"), col("__bn"),
+        col(idCol).as(s"doc_$suffix")): _*)
     val joinKeys = bucketKeys
     val small = {
       val a = side("a", 0).filter(col("__bn") <= maxBucket).drop("__rn", "__bn")
@@ -289,10 +226,8 @@ object Dedup {
       val b = side("b", -1).filter(col("__bn") > maxBucket).drop("__bn")
       a.join(b, joinKeys :+ "__rn").drop("__rn")
     }
-    val out = Seq("doc_a", "doc_b") ++
-      payload.flatMap(p => Seq(s"${p}_a", s"${p}_b"))
-    small.select(out.map(col): _*)
-      .unionByName(chain.select(out.map(col): _*))
+    small.select(col("doc_a"), col("doc_b"))
+      .unionByName(chain.select(col("doc_a"), col("doc_b")))
   }
 
   /** Candidate pairs = docs sharing any band signature. The join key
@@ -301,8 +236,7 @@ object Dedup {
     * pairs — linear output, same transitive closure.
     */
   def lshCandidatePairs(bandsIn: DataFrame, maxBucket: Int = 64): DataFrame =
-    boundedBucketPairs(bandsIn, Seq("band", "band_sig"), "doc_id",
-      payload = Seq.empty, maxBucket = maxBucket)
+    boundedBucketPairs(bandsIn, Seq("band", "band_sig"), "doc_id", maxBucket)
       .distinct()
 
   /** Incremental dedup: flag each batch doc against (1) a persisted
@@ -335,7 +269,7 @@ object Dedup {
     * per (band, band_sig). Mergeable (min of mins) and append-only,
     * so generations written by successive ingests coexist and are
     * re-aggregated at read time. `bandsOf` picks the signature
-    * family: [[lshBandsMd5]] (oracle-reproducible) or
+    * family: [[lshBandsMd5Narrow]] (oracle-reproducible) or
     * [[lshBandsNarrow]] (production: zero-shuffle codegen'd front).
     */
   def bandIndex(corpus: DataFrame, idCol: String, textCol: String,
@@ -404,168 +338,31 @@ object Dedup {
         round(col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")), 6))
   }
 
-  // 64-bit signature split into 6 blocks (11,11,11,11,10,10 bits) —
-  // Manku/Jain/Sarma WWW'07 §3: for hamming ≤ 3 the flipped bits lie
-  // in at most 3 blocks, so for at least one of the C(6,3)=20 block
-  // triples all three key blocks are intact.
-  private val blockWidths = Seq(11, 11, 11, 11, 10, 10)
-  private val blockOffsets = blockWidths.scanLeft(0)(_ + _).init
-  private val blockTriples =
-    for { i <- 0 until 6; j <- i + 1 until 6; k <- j + 1 until 6 } yield (i, j, k)
-
-  /** All near-dup pairs with hamming(simhash) ≤ maxHamming ≤ 3, via
-    * Manku-style 3-of-6 block keys: 20 triples × ~32-bit keys, so
-    * bucket sizes scale as corpus/2³², not corpus/2¹⁶ as with single
-    * 16-bit quadrant keys. The triples are exploded into rows and
-    * joined in ONE shuffle on (triple, key); oversized buckets (mass
-    * duplicates ⇒ identical signatures) degrade to linear chain pairs.
-    * Composed from built-ins (bucket join + bit_count on XOR), per
-    * the compose-first extension policy — no custom physical operator
-    * needed.
+  /** All near-dup pairs (doc_a < doc_b, hamming) with
+    * hamming(simhash) ≤ maxHamming ≤ 3 over [[simhashTable]]
+    * signatures, via the native Manku 3-of-6 block-key self-join
+    * ([[graft.plans.HammingJoinPlan.simhashPairs]]: one shuffle,
+    * bucket-local pair dedup). Buckets over `maxBucket` members (mass
+    * duplicates ⇒ identical signatures) degrade to linear chain pairs
+    * that keep the group connected. The id is widened to bigint, the
+    * exec's id type.
     */
-  /** The exploded (triple, bkey) rows for a simhash column — one row
-    * per C(6,3) block triple. Exposed for the pigeonhole property
-    * spec, which asserts recall on raw signatures.
-    */
-  private[graft] def tripleKeys(sig: Column): Column = {
-    def block(i: Int): Column =
-      shiftrightunsigned(sig, blockOffsets(i))
-        .bitwiseAND(lit((1L << blockWidths(i)) - 1))
-    array(blockTriples.zipWithIndex.map { case ((i, j, k), c) =>
-      struct(lit(c).as("triple"),
-        (shiftleft(block(i), 22).bitwiseOR(shiftleft(block(j), 11))
-          .bitwiseOR(block(k))).as("bkey"))
-    }: _*)
-  }
-
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int, maxBucket: Int = 64): DataFrame =
-    simhashNearDupsFromSigs(simhashTable(docs, idCol, textCol), maxHamming, maxBucket)
-
-  /** [[simhashNearDups]] over md5-bit signatures ([[simhashTableMd5]])
-    * — bit-reproducible in the DuckDB oracle, which verifies the full
-    * pair set against an exact O(n²) hamming scan (sound because the
-    * 3-of-6 block scheme has recall 1.0 for hamming ≤ 3, so bucketing
-    * is a pure optimization, not an approximation).
-    */
-  def simhashNearDupsMd5(docs: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int, maxBucket: Int = 64): DataFrame =
-    simhashNearDupsFromSigs(simhashTableMd5(docs, idCol, textCol), maxHamming, maxBucket)
-
-  private def simhashNearDupsFromSigs(sigs: DataFrame, maxHamming: Int,
-                                      maxBucket: Int): DataFrame = {
-    require(maxHamming <= 3, s"3-of-6 block keys guarantee recall only for hamming <= 3, got $maxHamming")
-    val keyed = sigs
-      .select(col("doc_id"), col("simhash"),
-        explode(tripleKeys(col("simhash"))).as("ck"))
-      .select(col("doc_id"), col("simhash"),
-        col("ck.triple").as("triple"), col("ck.bkey").as("bkey"))
-    boundedBucketPairs(keyed, Seq("triple", "bkey"), "doc_id",
-      payload = Seq("simhash"), maxBucket = maxBucket)
-      .select(col("doc_a"), col("doc_b"),
-        col("simhash_a").as("sig_a"), col("simhash_b").as("sig_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
-  /** Connected components over a pair list (min-label propagation):
-    * the cluster step of near-dup dedup — transitive closure of LSH
-    * candidate pairs, one canonical (min) id per duplicate group.
-    *
-    * Iterative driver-coordinated loop over distributed joins (the
-    * MLlib/GraphX pattern): each round every node adopts the minimum
-    * label among itself, its neighbors' labels, and — via a synthetic
-    * node→label edge — its label's own label (POINTER JUMPING, folded
-    * into the one neighbor-min join). Jumping halves the remaining
-    * chain length every round, so even path graphs (the shape
-    * hot-bucket chain pairs produce) converge in O(log n) rounds, not
-    * O(diameter). Labels are lazily localCheckpoint'ed each round
-    * (flat Catalyst plan; lineage otherwise grows until plan
-    * construction blows the driver heap) and the change count is
-    * checked every 2nd round, so a pair of rounds costs exactly one
-    * driver action. The driver only ever sees that count — labels and
-    * edges stay distributed.
-    *
-    * Block lifetime: each convergence count materializes the newest
-    * label checkpoint, at which point every OLDER round's blocks are
-    * released ([[graft.Caching.releaseCheckpoint]]) — executor storage
-    * holds ≤ 3 label tables at any moment, not one per round (at
-    * 100 TB a 50-round run must not retain 50 copies). The loop's own
-    * pair/edge persists are unpersisted before returning: the final
-    * count has already materialized the result checkpoint, so the
-    * returned labels are self-contained.
-    */
-  def connectedComponents(pairsIn: DataFrame, maxIter: Int = 50): DataFrame = {
-    // both direction branches of the edge union consume the pair
-    // lineage — persist it or the upstream (LSH) pipeline runs twice
-    val pairs = pairsIn.scopedPersist()
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .scopedPersist()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .loopCheckpoint(true)
-    var superseded = List.empty[DataFrame] // our checkpoints, not yet freed
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // Pointer jumping is FOLDED into the neighbor-min join: each
-      // node contributes a synthetic edge node→label(node), so the
-      // neighbor-min over labels-of-dst also delivers
-      // label(label(node)) — Shiloach–Vishkin shortcutting without a
-      // second join. Chains (the hot-bucket pair shape) still halve
-      // every round → O(log n) rounds. Labels only decrease, so a
-      // round that changes nothing is a fixed point; checking every
-      // 2nd round halves driver actions at the cost of at most one
-      // redundant round. Lazy localCheckpoint keeps the Catalyst plan
-      // flat (the driver-heap risk) while letting both rounds of a
-      // pair execute inside the single convergence-count job.
-      val edgesAug = edges.unionByName(
-        labels.filter(col("label") =!= col("node"))
-          .select(col("node").as("src"), col("label").as("dst")))
-      val neighborMin = edgesAug
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        .withColumnRenamed("src", "node")
-      val updated = labels
-        .join(neighborMin, Seq("node"), "left")
-        .select(col("node"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .loopCheckpoint(false)
-      superseded ::= labels
-      i += 1
-      if (i % 2 == 0 || i >= maxIter) {
-        val changed = updated.filter(col("label") =!= col("__old")).count()
-        converged = changed == 0
-        // the count just materialized `updated`'s checkpoint — every
-        // older label round is superseded; free its blocks
-        superseded.foreach(graft.Caching.releaseCheckpoint)
-        superseded = Nil
-      }
-      labels = updated.select(col("node"), col("label"))
-    }
-    // every loop exit passes through a count round, so the final label
-    // checkpoint is materialized — the loop's working persists can go
-    edges.unpersist(false)
-    pairs.unpersist(false)
-    lastCcRounds.set(i)
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-  }
+    graft.plans.HammingJoinPlan.simhashPairs(
+      simhashTable(docs, idCol, textCol).withColumn("doc_id", col("doc_id").cast("long")),
+      "doc_id", "simhash", maxHamming, maxBucket)
 
   /** Diagnostic only (Stress's `cc_rounds`): rounds the most recent CC run took. */
   private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Round-12 EVALUATION variant (judge ask #8): the two-phase
-    * alternating LARGE-STAR / SMALL-STAR connected components of
-    * Kiveris et al., "Connected Components in MapReduce and Beyond"
-    * (SoCC'14), measured head-to-head against [[connectedComponents]]
-    * on the stress corpus (SURVEY §31b). Semantics are
-    * identical — every node labeled with its component's minimum id —
-    * so the q59-family oracle hashes cannot move if this variant is
-    * ever swapped in.
+  /** Connected components over a pair list: the cluster step of
+    * near-dup dedup — transitive closure of LSH candidate pairs, every
+    * node labeled with its component's minimum id (one canonical id
+    * per duplicate group). The two-phase alternating LARGE-STAR /
+    * SMALL-STAR algorithm of Kiveris et al., "Connected Components in
+    * MapReduce and Beyond" (SoCC'14); on the stress corpus it beat
+    * min-label propagation with pointer jumping (SURVEY §31b).
     *
     * Per iteration, from the current edge multiset E (kept with
     * u > v invariant after small-star; mixed after large-star):
@@ -575,11 +372,18 @@ object Dedup {
     *    min Γ₍₋₎(u); re-hang u and its smaller neighbors on m.
     * Both steps strictly flatten trees toward stars; the fixed point
     * is a star forest whose centers are component minima. Convergence
-    * is detected by an (edge count, order-invariant xxhash64 sum)
-    * signature going stable — one aggregate per iteration, the same
-    * driver-sees-only-scalars contract as the min-label loop. Each
-    * round's edges ride [[graft.Caching.loopCheckpoint]] with
-    * superseded rounds released, the q91/CC block-lifetime discipline.
+    * is detected every 2nd round by an (edge count, order-invariant
+    * xxhash64 XOR) signature going stable — one driver action per
+    * round pair, and the driver only ever sees those two scalars.
+    *
+    * Block lifetime: each round's edges ride
+    * [[graft.Caching.loopCheckpoint]] (flat Catalyst plan; lineage
+    * otherwise grows until plan construction blows the driver heap);
+    * each convergence check materializes the newest round, and every
+    * older round's blocks are then released — at 100 TB a 50-round run
+    * must not retain 50 copies. The loop's pair/node persists are
+    * unpersisted before returning, and the returned labels are a
+    * materialized checkpoint.
     */
   def connectedComponentsTwoPhase(pairsIn: DataFrame, maxIter: Int = 50): DataFrame = {
     val pairs = pairsIn.scopedPersist()
@@ -601,8 +405,8 @@ object Dedup {
       // groupBy and the large-star join share one exchange — SLOWER on
       // every CC consumer (q59 2.35→3.4 s, q79 2.6→2.9 s, q258 mixed):
       // AQE broadcast-converts the mins side anyway, so the repartition
-      // only added a round-trip. Reverted — the r17 min-label
-      // co-partitioning experiment failed the same way.)
+      // only added a round-trip. Reverted — an r17 co-partitioning
+      // experiment on the earlier min-label CC failed the same way.)
       val sym = edges.select(col("u"), col("v"))
         .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       // Round 17 (guide §2.4): no distinct between the stars — the
@@ -639,9 +443,8 @@ object Dedup {
         .loopCheckpoint(false)
       superseded ::= edges
       i += 1
-      // convergence check every 2nd round (the min-label discipline:
-      // one driver action per round pair, at most two redundant
-      // rounds). Signature is order-invariant and overflow-free:
+      // convergence check every 2nd round: one driver action per
+      // round pair, at most two redundant rounds. Signature is order-invariant and overflow-free:
       // count + XOR of row hashes (a SUM of hashes overflows long
       // under ANSI mode). At the star-forest fixed point the edge set
       // is literally identical round to round, so a stable signature
@@ -662,7 +465,7 @@ object Dedup {
     // centers (or isolated among the pairs) label themselves. The
     // label extraction materializes eagerly so the RETURNED frame is a
     // self-contained checkpoint read (1 exchange in every consumer's
-    // plan — the min-label variant's contract); the CC loop has
+    // plan); the CC loop has
     // already run jobs at construction, so this adds one node-sized
     // job, not a new execution phase.
     val out = nodes
@@ -757,28 +560,6 @@ object Dedup {
     tokenized(docs, idCol, textCol, minLen = k + w - 1)
       .select(col("doc_id"),
         explode(GraftFunctions.winnow(col("__toks"), k, w)).as("fp"))
-
-  /** The compositional spelling of [[winnowedFingerprints]] —
-    * identical output by construction (the kernel's contract);
-    * retained as the in-repo parity baseline (SpanDedupSpec) and the
-    * shape mirrored by the DuckDB oracle. `__hs` is a materialized
-    * projection column, NOT an inline subtree: it is referenced from
-    * inside a higher-order lambda where Catalyst disables
-    * subexpression elimination (see GraftFunctions.wordShingles).
-    */
-  def winnowedFingerprintsComposed(docs: DataFrame, idCol: String,
-                                   textCol: String,
-                                   k: Int = 8, w: Int = 13): DataFrame =
-    fingerprintAgg(
-      tokenized(docs, idCol, textCol, minLen = k + w - 1)
-        .select(col("doc_id"),
-          transform(sequence(lit(1), size(col("__toks")) - (k - 1)),
-            i => md5(concat_ws(" ", slice(col("__toks"), i, lit(k)))))
-            .as("__hs"))
-        .select(col("doc_id"),
-          explode(array_distinct(
-            transform(sequence(lit(1), size(col("__hs")) - (w - 1)),
-              i => array_min(slice(col("__hs"), i, lit(w)))))).as("fp")))
 
   /** Exact-substring dedup with SPAN EXTENTS (round 9) — the Lee et
     * al.'21 ExactSubstr operator ("Deduplicating Training Data Makes
@@ -1135,7 +916,7 @@ object Dedup {
     if (longKeys) xxhash64(slice(toks, pos, lit(minLen)))
     else md5(concat_ws(" ", slice(toks, pos, lit(minLen))))
 
-  private def tokenized(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def tokenized(docs: DataFrame, idCol: String, textCol: String,
                         minLen: Int): DataFrame = {
     val toks = filter(split(col(textCol), " "), t => t =!= "")
     docs
@@ -1187,7 +968,7 @@ object Dedup {
           .otherwise(md5(col("__new_text"))).as("new_hash"))
   }
 
-  private def fingerprintAgg(perDocFps: DataFrame): DataFrame =
+  private[graft] def fingerprintAgg(perDocFps: DataFrame): DataFrame =
     perDocFps
       .groupBy(col("fp"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),

@@ -9,8 +9,8 @@ import graft.Caching.LoopCheckpoint
 import graft.Caching.ScopedPersist
 
 /** SURVEY §2.3 — graph analytics over an edge list, complementing the
-  * connected components in [[Dedup.connectedComponents]]: PageRank by
-  * power iteration. Every step is a distributed join/aggregate — the
+  * connected components in [[Dedup.connectedComponentsTwoPhase]]:
+  * PageRank by power iteration. Every step is a distributed join/aggregate — the
   * driver never sees a row; per-round localCheckpoint caps lineage
   * (the CC lesson: persist alone leaves the plan tree growing), and
   * superseded checkpoint blocks are RELEASED as the loop advances

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** SURVEY.md §2.5 / VERDICT r6 #4 — the second whole-operator Catalyst
@@ -18,15 +19,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * Semantics: given rows (id, sig), emit every pair id_a < id_b with
   * popcount(sig_a XOR sig_b) ≤ maxHamming (≤ 3) — the near-duplicate
-  * pair search of Manku/Jain/Sarma WWW'07, same contract as the
-  * compositional `Dedup.simhashNearDups`.
+  * pair search of Manku/Jain/Sarma WWW'07, and the one implementation
+  * behind `Dedup.simhashNearDups`, q32b and q110.
   *
-  * Why a custom operator: the compositional form explodes each doc
-  * into its C(6,3) = 20 block-triple keys, runs a window (count +
-  * row_number ⇒ shuffle + sort) for the hot-bucket guard, self-joins
-  * on the bucket key, and then needs a full `distinct()` shuffle over
-  * the PAIR SET, because a pair at hamming h matches on up to
-  * C(6-h,3) ≥ 1 triples and is emitted once per match. This exec:
+  * Why a custom operator: composed from built-ins, the search explodes
+  * each doc into its C(6,3) = 20 block-triple keys, runs a window
+  * (count + row_number ⇒ shuffle + sort) for the hot-bucket guard,
+  * self-joins on the bucket key, and then needs a full `distinct()`
+  * shuffle over the PAIR SET, because a pair at hamming h matches on
+  * up to C(6-h,3) ≥ 1 triples and is emitted once per match. This
+  * exec:
   *
   *  - fans the 20 keyed copies out in ONE internal shuffle
   *    (`repartitionAndSortWithinPartitions` on the bucket key with the
@@ -36,7 +38,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    under `maxBucket` emit all-pairs, larger buckets (mass-duplicate
   *    boilerplate) degrade to consecutive CHAIN pairs — linear output,
   *    connectivity preserved for the downstream connected-components
-  *    pass, identical policy to `Dedup.boundedBucketPairs`;
+  *    pass, identical policy to `Dedup.boundedBucketPairs` (the
+  *    `numOverCapBuckets` metric counts these buckets);
   *  - deduplicates LOCALLY instead of globally: a surviving pair is
   *    emitted only by the FIRST triple on which the two signatures
   *    agree, which each bucket can decide from the two sigs alone —
@@ -70,8 +73,7 @@ object HammingBlocks {
   // Manku 3-of-6 block split of a 64-bit signature: 11,11,11,11,10,10
   // bit blocks; for hamming ≤ 3 the flipped bits touch ≤ 3 blocks, so
   // at least one of the C(6,3) = 20 triples is intact on both sides.
-  // Must stay consistent within this operator only (the exec both
-  // emits and dedups with it); independent of the Column-API variant.
+  // The exec both emits and dedups with this one split.
   private val widths = Array(11, 11, 11, 11, 10, 10)
   private val offsets = widths.scanLeft(0)(_ + _).init
   val triples: Array[(Int, Int, Int)] =
@@ -109,12 +111,14 @@ case class HammingSelfJoinExec(child: SparkPlan, idExpr: Expression, sigExpr: Ex
   override def output: Seq[Attribute] = outputAttrs
   override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
 
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numOverCapBuckets" -> SQLMetrics.createMetric(sparkContext,
+      "number of over-cap buckets (chain pairs)"))
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
+    val numOverCapBuckets = longMetric("numOverCapBuckets")
     val childOut = child.output
     val idE = idExpr; val sigE = sigExpr
     val maxH = maxHamming; val maxB = maxBucket
@@ -188,6 +192,7 @@ case class HammingSelfJoinExec(child: SparkPlan, idExpr: Expression, sigExpr: Ex
           } else {
             // over-cap: chain pairs over the buffered prefix, then
             // stream the remainder against one carried row
+            numOverCapBuckets += 1
             var prev = buf.last
             val prefix = (for {
               i <- (0 until buf.length - 1).iterator
@@ -225,8 +230,10 @@ case class HammingSelfJoinExec(child: SparkPlan, idExpr: Expression, sigExpr: Ex
 object HammingJoinPlan {
 
   /** DataFrame-level API over a signatures table: all (doc_a, doc_b,
-    * hamming) pairs with hamming ≤ maxHamming (≤ 3). Registers the
-    * planner strategy on first use (also installed by
+    * hamming) pairs with hamming ≤ maxHamming (≤ 3). The id and
+    * signature columns must be bigint: the exec reads both as 8-byte
+    * longs, and an int slot read that way loses its sign. Registers
+    * the planner strategy on first use (also installed by
     * `GraftExtensions`).
     */
   def simhashPairs(sigs: DataFrame, idCol: String, sigCol: String,
@@ -239,9 +246,13 @@ object HammingJoinPlan {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ HammingSelfJoinStrategy
     val plan = sigs.queryExecution.analyzed
-    def attr(n: String): Attribute =
-      plan.output.find(_.name == n).getOrElse(
+    def attr(n: String): Attribute = {
+      val a = plan.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(s"no column '$n' in ${plan.output.map(_.name)}"))
+      require(a.dataType == LongType,
+        s"column '$n' must be bigint, got ${a.dataType.simpleString}")
+      a
+    }
     val out = Seq(
       AttributeReference("doc_a", LongType, nullable = false)(),
       AttributeReference("doc_b", LongType, nullable = false)(),

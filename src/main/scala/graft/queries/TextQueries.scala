@@ -245,19 +245,21 @@ object TextQueries {
     },
 
     // §2.3 #32 — full simhash near-dup pair search (Manku 3-of-6
-    // block-key bucket joins + bit_count hamming filter). Oracled
-    // against DuckDB's exact O(n²) hamming scan: sound because the
-    // block scheme has recall 1.0 for hamming ≤ 3, so the bucketed
-    // plan must produce the identical pair set.
+    // block keys + popcount hamming filter) over md5-bit signatures,
+    // through the native HammingSelfJoinExec. Oracled against DuckDB's
+    // exact O(n²) hamming scan: sound because the block scheme has
+    // recall 1.0 for hamming ≤ 3, so the bucketed plan must produce
+    // the identical pair set.
     "q32b_simhash_pairs" -> { (s, d) =>
-      Dedup.simhashNearDupsMd5(plantedCorpus(s, d), "doc_id", "text", maxHamming = 3)
+      graft.plans.HammingJoinPlan.simhashPairs(
+        Dedup.simhashTableMd5(plantedCorpus(s, d), "doc_id", "text"),
+        "doc_id", "simhash", maxHamming = 3)
         .orderBy(col("doc_a"), col("doc_b"))
     },
 
-    // §2.5 — the same pair search through the NATIVE physical operator
-    // (HammingSelfJoinExec): one internal shuffle, bucket-local pair
-    // dedup, no window and no pair-set distinct. Same exact oracle as
-    // q32b — the two paths must produce identical pair sets.
+    // §2.5 — the native physical operator (HammingSelfJoinExec) that
+    // q32b runs: one internal shuffle, bucket-local pair dedup, no
+    // window and no pair-set distinct. Same plan and oracle as q32b.
     "q110_simhash_pairs_native" -> { (s, d) =>
       graft.plans.HammingJoinPlan.simhashPairs(
         Dedup.simhashTableMd5(plantedCorpus(s, d), "doc_id", "text"),
@@ -510,7 +512,7 @@ object TextQueries {
     },
 
     // §2.3 #31 — duplicate-cluster resolution: transitive closure of
-    // the LSH candidate pairs via min-label connected components; one
+    // the LSH candidate pairs via two-phase connected components; one
     // canonical (minimum) doc id per duplicate group.
     "q59_dup_clusters" -> { (s, d) =>
       val bands = Dedup.lshBandsMd5Narrow(plantedCorpus(s, d), "doc_id", "text",
@@ -2422,8 +2424,7 @@ object TextQueries {
       "<a href=\"/cookies\">Cookie Settings</a> (c) 2020</p>" +
       "</footer></body></html>"
 
-  /** Exact O(n²) hamming scan — shared by q32b (compositional path)
-    * and q110 (native HammingSelfJoinExec); both must match it. */
+  /** Exact O(n²) hamming scan — the oracle of q32b and q110. */
   private val simhashPairsOracle =
     s"""WITH $corpusSql,
        |$simhashBitsSql,

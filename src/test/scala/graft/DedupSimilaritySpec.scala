@@ -255,9 +255,32 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(planted.filter(col("hamming") =!= 0).count() == 0)
   }
 
+  /** The aggregate formulation of [[Dedup.lshBandsMd5Narrow]] — the
+    * parity baseline for the fused kernel and the shape the DuckDB
+    * oracles mirror: per-seed md5-slice minima and the per-band md5
+    * fold in ONE doc_id aggregation over the shingle stream.
+    */
+  private def lshBandsMd5(docs: org.apache.spark.sql.DataFrame, idCol: String,
+                          textCol: String, shingleWidth: Int, nSeeds: Int,
+                          rowsPerBand: Int): org.apache.spark.sql.DataFrame = {
+    val hashed = Dedup.docShingles(docs, idCol, textCol, shingleWidth)
+      .select(col("doc_id"), md5(col("sh")).as("h"))
+    val mins = (0 until nSeeds).map(s =>
+      min(substring(col("h"), s * 4 + 1, 4)).as(s"mh_$s"))
+    val bandSigs = (0 until nSeeds / rowsPerBand).map { b =>
+      md5(concat_ws(",",
+        (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}")): _*))
+    }
+    hashed
+      .groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), posexplode(array(bandSigs: _*)))
+      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_sig"))
+  }
+
   test("fused md5 band kernel is bit-identical to the aggregate formulation") {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val viaAgg = Dedup.lshBandsMd5(docs, "doc_id", "text", 3, 8, 4)
+    val viaAgg = lshBandsMd5(docs, "doc_id", "text", 3, 8, 4)
       .orderBy("doc_id", "band").collect().toSeq
     val viaKernel = Dedup.lshBandsMd5Narrow(docs, "doc_id", "text", 3, 8, 4)
       .orderBy("doc_id", "band").collect().toSeq
@@ -280,26 +303,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
     // fresh batch docs (no planted twin) must not all be flagged
     assert(out.filter(col("doc_id") >= 400 and col("doc_id") < 2000000 and
       col("status") === "keep").count() > 0)
-  }
-
-  test("simhash 3-of-6 block keys: any <=3-bit flip shares a key (pigeonhole)") {
-    import spark.implicits._
-    // 500 seeded (signature, <=3-bit mask) pairs: the Manku guarantee
-    // is that flipped and original ALWAYS share at least one of the 20
-    // triple keys — recall 1.0 for hamming <= 3 by construction
-    val rnd = new scala.util.Random(42)
-    val rows = (0 until 500).map { _ =>
-      val sig = rnd.nextLong()
-      val nFlips = 1 + rnd.nextInt(3)
-      val mask = (0 until nFlips).map(_ => 1L << rnd.nextInt(64)).reduce(_ | _)
-      (sig, sig ^ mask)
-    }
-    val df = rows.toDF("sig", "flipped")
-      .select(arrays_overlap(
-        graft.operators.Dedup.tripleKeys(col("sig")),
-        graft.operators.Dedup.tripleKeys(col("flipped"))).as("shares"))
-    assert(df.filter(!col("shares")).count() == 0,
-      "a <=3-bit flip escaped every block triple — pigeonhole violated")
   }
 
   test("cosine near-dup pairs are exactly the planted copies") {
@@ -700,11 +703,21 @@ class DedupSimilaritySpec extends SparkSpecBase {
       "incremental CDC index diverged from the full scan")
   }
 
-  test("two-phase CC labels exactly match min-label CC on adversarial shapes") {
+  test("two-phase CC labels exactly match a driver-side union-find on adversarial shapes") {
     import spark.implicits._
     def parity(pairs: org.apache.spark.sql.DataFrame): Unit = {
-      val a = graft.operators.Dedup.connectedComponents(pairs)
-        .as[(Long, Long)].collect().toSet
+      // reference: union-find over the collected pairs, every node
+      // labeled with its component's minimum id
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.as[(Long, Long)].collect().foreach { case (x, y) =>
+        val (rx, ry) = (find(x), find(y))
+        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+      }
+      val a = parent.keys.map(n => (n, find(n))).toSet
       val b = graft.operators.Dedup.connectedComponentsTwoPhase(pairs)
         .as[(Long, Long)].collect().toSet
       assert(a == b, s"divergence: ${(a diff b).take(3)} vs ${(b diff a).take(3)}")

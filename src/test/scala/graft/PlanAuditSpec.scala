@@ -31,6 +31,7 @@ class PlanAuditSpec extends SparkSpecBase {
   test("no query plans a CartesianProduct (AQE on and off)") {
     underBothAqeModes {
       SparkEntry.queries.foreach { case (name, fn) =>
+        spark.catalog.clearCache() // no plan may read an earlier query's cache
         val plan = fn(spark, sf).queryExecution.executedPlan.toString
         assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian product")
       }
@@ -40,6 +41,7 @@ class PlanAuditSpec extends SparkSpecBase {
   test("nested-loop joins appear only where intended (AQE on and off)") {
     underBothAqeModes {
       SparkEntry.queries.foreach { case (name, fn) =>
+        spark.catalog.clearCache()
         val plan = fn(spark, sf).queryExecution.executedPlan.toString
         if (!intendedNestedLoop.contains(name) && plan.contains("BroadcastNestedLoopJoin"))
           assert(plan.contains("BroadcastNestedLoopJoin BuildRight"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.SketchQueries
 import graft.streaming.StatefulSessions
@@ -87,17 +86,16 @@ class ScaleSpec extends SparkSpecBase {
     val boiler = (0L until 1000L).map(i => (i, "the quick brown fox jumps over the lazy dog again and again"))
     val distinctDocs = (2000L until 2100L).map(i => (i, s"unique document number $i with its own words ${i * 7} and ${i * 13}"))
     val docs = (boiler ++ distinctDocs).toDF("doc_id", "text")
-    val sigs = graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text",
-      shingleWidth = 3, nSeeds = 8)
-    val pairs = graft.operators.Dedup.lshCandidatePairs(
-      graft.operators.Dedup.lshBands(sigs, rowsPerBand = 4), maxBucket = 64)
+    val bands = graft.operators.Dedup.lshBandsMd5Narrow(docs, "doc_id", "text",
+      shingleWidth = 3, nSeeds = 8, rowsPerBand = 4)
+    val pairs = graft.operators.Dedup.lshCandidatePairs(bands, maxBucket = 64)
       .persist()
     val n = pairs.count()
     // linear, not quadratic: k·n with k = number of bands (2)
     assert(n <= 4 * 1100, s"hot bucket emitted $n pairs — quadratic blowup")
     // connectivity preserved: connected components still recovers the
     // full 1,000-member duplicate group under one canonical id
-    val clusters = graft.operators.Dedup.connectedComponents(pairs)
+    val clusters = graft.operators.Dedup.connectedComponentsTwoPhase(pairs)
       .filter(col("cluster_id") === 0L)
     assert(clusters.count() == 1000)
   }
@@ -112,24 +110,9 @@ class ScaleSpec extends SparkSpecBase {
     assert(n <= 20 * 500, s"simhash hot bucket emitted $n pairs")
     assert(pairs.filter(col("hamming") =!= 0).count() == 0)
     // chain pairs keep the group connected
-    val clusters = graft.operators.Dedup.connectedComponents(
+    val clusters = graft.operators.Dedup.connectedComponentsTwoPhase(
       pairs.select("doc_a", "doc_b")).filter(col("cluster_id") === 0L)
     assert(clusters.count() == 500)
-  }
-
-  test("xxhash64 minhash path recovers the same planted duplicates as md5") {
-    import spark.implicits._
-    val base = (0L until 200L).map(i => (i, s"document $i body with shared vocabulary token${i % 7} token${i % 11} filler words"))
-    val copies = (0L until 30L).map(i => (i + 100000L, base(i.toInt)._2))
-    val docs = (base ++ copies).toDF("doc_id", "text")
-    def pairsOf(sigs: org.apache.spark.sql.DataFrame) =
-      graft.operators.Dedup.lshCandidatePairs(
-        graft.operators.Dedup.lshBands(sigs, rowsPerBand = 4))
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val fast = pairsOf(graft.operators.Dedup.minhashSignaturesFast(
-      docs, "doc_id", "text", shingleWidth = 3, nSeeds = 8))
-    val planted = (0L until 30L).map(i => (i, i + 100000L)).toSet
-    assert(planted.subsetOf(fast), s"fast path missed ${(planted -- fast).take(3)}")
   }
 
   test("narrow LSH front: zero shuffles before the bucket join, dups recovered") {
@@ -150,28 +133,21 @@ class ScaleSpec extends SparkSpecBase {
     assert(planted.subsetOf(pairs), s"narrow front missed ${(planted -- pairs).take(3)}")
   }
 
-  private val ccVariants: Seq[(String, DataFrame => DataFrame)] = Seq(
-    "min-label" -> (graft.operators.Dedup.connectedComponents(_, maxIter = 50)),
-    "two-phase" -> (graft.operators.Dedup.connectedComponentsTwoPhase(_, maxIter = 50)))
-
   test("iterative loops release superseded checkpoint blocks (bounded storage)") {
     import spark.implicits._
     spark.catalog.clearCache()
     val baseline = spark.sparkContext.getPersistentRDDs.size
-    // long chain → many rounds (4096 nodes ≈ 12 pointer-jump rounds);
-    // both CC variants: min-label and the two-phase loop the queries run
+    // long chain → many CC rounds
     val chain = (0L until 4095L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    ccVariants.foreach { case (variant, ccOf) =>
-      val cc = ccOf(chain)
-      assert(cc.select(countDistinct(col("cluster_id"))).first().getLong(0) == 1L)
-      // after the operator returns: ONE retained table (the result
-      // checkpoint) — not one per round, and the pair/edge persists are
-      // gone (unpersist removes the registry entry synchronously)
-      val afterCC = spark.sparkContext.getPersistentRDDs.size
-      assert(afterCC <= baseline + 1,
-        s"$variant CC leaked checkpoint blocks: $baseline -> $afterCC persistent RDDs")
-      Caching.releaseCheckpoint(cc)
-    }
+    val cc = graft.operators.Dedup.connectedComponentsTwoPhase(chain, maxIter = 50)
+    assert(cc.select(countDistinct(col("cluster_id"))).first().getLong(0) == 1L)
+    // after the operator returns: ONE retained table (the result
+    // checkpoint) — not one per round, and the pair/node persists are
+    // gone (unpersist removes the registry entry synchronously)
+    val afterCC = spark.sparkContext.getPersistentRDDs.size
+    assert(afterCC <= baseline + 1,
+      s"CC leaked checkpoint blocks: $baseline -> $afterCC persistent RDDs")
+    Caching.releaseCheckpoint(cc)
 
     // 20 deterministic pageRank rounds, eager point every 5
     val edges = (0L until 500L).map(i => (i, (i * 7 + 1) % 500)).toDF("src", "dst")
@@ -198,19 +174,19 @@ class ScaleSpec extends SparkSpecBase {
     // Same inputs through both modes must produce identical results.
     val chain = (0L until 1023L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val edges = (0L until 300L).map(i => (i, (i * 7 + 1) % 300)).toDF("src", "dst")
-    def ccRuns() = ccVariants.map { case (variant, ccOf) =>
-      variant -> ccOf(chain).as[(Long, Long)].collect().sorted.toSeq }
+    def ccRun() = graft.operators.Dedup.connectedComponentsTwoPhase(chain, maxIter = 50)
+      .as[(Long, Long)].collect().sorted.toSeq
     def prRun() = graft.operators.Graph.pageRank(edges, iters = 8, ckptEvery = 3)
       .select(col("id"), round(col("rank"), 10).as("rank"))
       .as[(Long, Double)].collect().sorted.toSeq
     def bpeRun() = graft.operators.Bpe.learnMerges(
         Seq("aa ab aa ab ba", "aa ab aa").toDF("text"), "text", k = 3)
       .select("rank", "merged").as[(Int, String)].collect().sorted.toSeq
-    val (ccLocal, prLocal, bpeLocal) = (ccRuns(), prRun(), bpeRun())
+    val (ccLocal, prLocal, bpeLocal) = (ccRun(), prRun(), bpeRun())
     val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt")
     spark.conf.set("spark.graft.checkpointDir", dir.toString)
     try {
-      assert(ccRuns() == ccLocal, "CC diverged under reliable checkpointing")
+      assert(ccRun() == ccLocal, "CC diverged under reliable checkpointing")
       assert(prRun() == prLocal, "pageRank diverged under reliable checkpointing")
       assert(bpeRun() == bpeLocal, "BPE diverged under reliable checkpointing")
       // reliable rounds actually landed on the FS

@@ -25,6 +25,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // checkpoints — the FINAL plan reads the last checkpoint, and the
     // per-round shuffles were already spent inside the loop
     "q110_simhash_pairs_native" -> 1, // ONE internal repartition+sort
+    "q32b_simhash_pairs" -> 1,        // the same native exec
     "q113_topk_native" -> 1,          // k-bounded partials, one exchange
     // ticket race rides TopKPerKeyExec; +1 (round 17): fanOutSmallScan's
     // conditional repartition fires at test scale (one-row-group file),
@@ -67,7 +68,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "q101_surprisal" -> 5,
     "q118_dsir_select" -> 5,
     "q31b_lsh_pairs" -> 6,
-    "q32b_simhash_pairs" -> 6,
     "q114_perplexity" -> 6,
     "q142_embed_outliers" -> 6,
     "q73_tfidf" -> 7,

@@ -52,6 +52,26 @@ class SpanDedupSpec extends SparkSpecBase {
     }
   }
 
+  /** The compositional spelling of [[Dedup.winnowedFingerprints]] —
+    * the kernel's parity baseline and the shape the DuckDB oracle
+    * mirrors. `__hs` is a materialized projection column, NOT an
+    * inline subtree: it is referenced from inside a higher-order
+    * lambda where Catalyst disables subexpression elimination (see
+    * GraftFunctions.wordShingles).
+    */
+  private def winnowedFingerprintsComposed(docs: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, k: Int, w: Int): org.apache.spark.sql.DataFrame =
+    Dedup.fingerprintAgg(
+      Dedup.tokenized(docs, idCol, textCol, minLen = k + w - 1)
+        .select(col("doc_id"),
+          transform(sequence(lit(1), size(col("__toks")) - (k - 1)),
+            i => md5(concat_ws(" ", slice(col("__toks"), i, lit(k)))))
+            .as("__hs"))
+        .select(col("doc_id"),
+          explode(array_distinct(
+            transform(sequence(lit(1), size(col("__hs")) - (w - 1)),
+              i => array_min(slice(col("__hs"), i, lit(w)))))).as("fp")))
+
   test("winnow kernel (deque) is bit-identical to the compositional formulation") {
     // real corpus + planted shifted spans, several (k, w) shapes
     val base = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
@@ -61,7 +81,7 @@ class SpanDedupSpec extends SparkSpecBase {
     for ((k, w) <- Seq((8, 13), (4, 5), (3, 18))) {
       val native = Dedup.winnowedFingerprints(planted, "doc_id", "text", k, w)
         .collect().map(_.toString).sorted.toSeq
-      val composed = Dedup.winnowedFingerprintsComposed(planted, "doc_id", "text", k, w)
+      val composed = winnowedFingerprintsComposed(planted, "doc_id", "text", k, w)
         .collect().map(_.toString).sorted.toSeq
       assert(native == composed, s"kernel diverged at k=$k w=$w")
       assert(native.nonEmpty, s"planted span must collide at k=$k w=$w")

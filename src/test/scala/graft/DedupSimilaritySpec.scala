@@ -703,7 +703,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
       "incremental CDC index diverged from the full scan")
   }
 
-  test("two-phase CC labels exactly match a driver-side union-find on adversarial shapes") {
+  test("two-phase CC labels exactly match a union-find on adversarial shapes") {
     import spark.implicits._
     def parity(pairs: org.apache.spark.sql.DataFrame): Unit = {
       // reference: union-find over the collected pairs, every node
